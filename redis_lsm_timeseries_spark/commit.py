@@ -16,11 +16,17 @@ append_rows            parquet append (one         transactional append
                        commit per job)
 overwrite_partitions   dynamic partition           MERGE / replaceWhere
                        overwrite
-drop_partition_dir     recursive delete            DELETE WHERE
+  ``drop=`` leg        delete of the named         DELETE WHERE
+                       partition dirs
 snapshot_rewrite       write-tmp + two renames     OPTIMIZE / rewrite
                        (+ crash repair)            under snapshot
                                                    isolation
 =====================  ==========================  =====================
+
+Partition drops name VALUES, never paths (``drop=[("a:b", 0)]``): each
+backend resolves them against its own files — the directory listing or
+the committed file list — through one resolver that decodes Spark's
+hive escapes (``_hive_values``), so no caller knows the on-disk layout.
 
 ``ParquetLeaseCommit`` is the default and preserves the exact protocol
 the engine has shipped since round 5 — correct under the enforced
@@ -125,34 +131,76 @@ def _driver_writable_fields(schema) -> list[tuple[str, str]] | None:
         return None
 
 
-def _driver_parquet_file(rows: list[tuple], schema, dest: str) -> bool:
-    """Write a BOUNDED protocol-metadata row batch as one parquet file
-    from the driver — no Spark job. The append-only protocol tables
-    (purge log: <= K marks / <= max_ids acks per call) pay one whole
-    Spark job per append under the createDataFrame path, pure fixed
-    cost at any scale; real table formats write commit metadata
-    driver-side for exactly this reason (Delta's JSON actions). Returns
-    False (caller falls back to the Spark write) when the schema
-    carries any type outside the exact-scalar map — datum fidelity is
-    the contract, so anything nontrivial keeps the old path.
+def _write_row_batch(store, rows: list[tuple], schema, dest_dir: str,
+                     physical=None) -> None:
+    """Write a BOUNDED row batch as one parquet file into ``dest_dir``.
 
-    Parquet shape matches the Spark writer where it matters for reads:
-    snappy compression, optional (nullable) fields — Spark writes all
-    fields optional regardless of declared nullability."""
+    When every column is an exact-mappable scalar and the stored
+    column names are the logical ones (no ``physical`` mapping), the
+    file is written from the driver with pyarrow — no Spark job. The
+    append-only protocol tables (purge log: <= K marks / <= max_ids
+    acks per call) would otherwise pay one whole Spark job per append,
+    pure fixed cost at any scale; real table formats write commit
+    metadata driver-side for exactly this reason (Delta's JSON
+    actions). The parquet shape matches the Spark writer where it
+    matters for reads: snappy compression, all fields optional.
+
+    Anything else is a single-slice Spark write (``physical`` maps the
+    DataFrame onto stored column names). Single-slice parallelize,
+    NOT ``createDataFrame(rows).coalesce(1)``: createDataFrame spreads
+    even a 4-row list over defaultParallelism partitions, and
+    coalesce(1) then evaluates all of them serially in one task. Write
+    errors propagate on both paths."""
+    fields = None if physical else _driver_writable_fields(schema)
+    if fields is None:
+        rdd = store.spark.sparkContext.parallelize(rows, 1)
+        df = store.spark.createDataFrame(rdd, schema)
+        (physical(df) if physical else df).write.mode("append").parquet(
+            dest_dir
+        )
+        return
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    fields = _driver_writable_fields(schema)
-    if fields is None:
-        return False
     pa_fields = [(name, getattr(pa, t)()) for name, t in fields]
     cols = list(zip(*rows)) if rows else [[] for _ in pa_fields]
     table = pa.Table.from_arrays(
         [pa.array(list(c), type=t) for c, (_, t) in zip(cols, pa_fields)],
         schema=pa.schema(pa_fields),
     )
-    pq.write_table(table, dest, compression="snappy")
-    return True
+    store.fs.makedirs(dest_dir)
+    pq.write_table(
+        table, f"{dest_dir}/part-{uuid.uuid4().hex}.snappy.parquet",
+        compression="snappy",
+    )
+
+
+def _partition_key(values) -> tuple[str, ...]:
+    """A partition-value tuple in the form stored values compare in:
+    hive's string spelling, NULL as the default-partition sentinel."""
+    return tuple(
+        ManifestCommit.HIVE_NULL if v is None else str(v) for v in values
+    )
+
+
+def _hive_values(segs, partition_cols) -> tuple[str, ...]:
+    """Unescaped values of the leading ``col=value`` segments of a
+    relative path that follow ``partition_cols`` in order — the one
+    place a stored hive path turns back into partition values (Spark
+    writes ``a:b`` as ``tag=a%3Ab``)."""
+    vals = []
+    for seg, col in zip(segs, partition_cols):
+        name, eq, raw = seg.partition("=")
+        if not eq or name != col:
+            break
+        vals.append(ManifestCommit._unescape_partition(raw))
+    return tuple(vals)
+
+
+def _is_dropped(values: tuple, drop: set) -> bool:
+    """True when some ``drop`` key is a leading prefix of ``values``
+    (the empty key drops every partition)."""
+    return any(values[:n] in drop for n in range(len(values) + 1))
 
 
 class TableCommit:
@@ -177,13 +225,28 @@ class TableCommit:
         raise NotImplementedError
 
     def overwrite_partitions(
-        self, store, df: DataFrame, path: str, partition_cols,
-        cdf_df: DataFrame | None = None,
+        self, store, df: DataFrame | None, path: str, partition_cols,
+        cdf_df: DataFrame | None = None, drop=(),
     ) -> None:
+        """Replace the partitions present in ``df`` and delete the
+        partitions ``drop`` names, in one operation. ``drop`` holds
+        partition-value tuples that are leading prefixes of
+        ``partition_cols`` — ``("a:b",)`` drops a whole tag,
+        ``("a:b", 120000)`` one of its time partitions, ``()`` every
+        partition. Values compare in their hive string form; the
+        backend resolves them against its own files, so callers never
+        build a storage path. ``df`` may be None for a pure drop."""
         raise NotImplementedError
 
-    def drop_partition_dir(self, store, path: str) -> None:
+    def partition_values(self, store, path: str, partition_cols) -> set:
+        """Value tuples (hive string form) of the table's partitions
+        at the depth of ``partition_cols`` — metadata only, no scan."""
         raise NotImplementedError
+
+    def member_files(self, store, path: str, version: int | None = None):
+        """Committed file relpaths of a manifest-managed table; None
+        for backends (or paths) that keep no file list."""
+        return None
 
     #: True for backends that can create/manage versioned manifest
     #: tables (EngineConfig.manifest_hot requires one — asking for a
@@ -612,33 +675,8 @@ class ParquetLeaseCommit(TableCommit):
 
     def append_rows(self, store, rows, schema, path: str) -> None:
         """One appended file per call — the one-stream-entry-per-Lua-
-        call analog. Single-slice parallelize, NOT
-        ``createDataFrame(rows).coalesce(1)``: createDataFrame spreads
-        even a 4-row list over defaultParallelism partitions, and
-        coalesce(1) then evaluates all 32 Python input partitions
-        serially in one task (~0.15 s of worker round-trips each —
-        measured 4.5 s per append). One input slice = one task.
-
-        r18: the file is written DRIVER-SIDE when every column is an
-        exact-mappable scalar (``_driver_parquet_file``) — the rows
-        are bounded protocol metadata already sitting in driver
-        memory, and the Spark job the old path paid per append was
-        the purge/ack protocol's single largest fixed cost. Non-scalar
-        schemas (or any driver-write failure) keep the Spark path."""
-        import uuid as _uuid
-
-        try:
-            store.fs.makedirs(path)
-            if _driver_parquet_file(
-                rows, schema,
-                f"{path}/part-{_uuid.uuid4().hex}.snappy.parquet",
-            ):
-                return
-        except Exception:
-            pass  # fall back to the Spark writer below
-        rdd = store.spark.sparkContext.parallelize(rows, 1)
-        df = store.spark.createDataFrame(rdd, schema)
-        df.write.mode("append").parquet(path)
+        call analog (see ``_write_row_batch``)."""
+        _write_row_batch(store, rows, schema, path)
 
     def append_partitioned(self, store, df, path, partition_cols,
                            app_meta=None, expected_app=None) -> None:
@@ -661,28 +699,60 @@ class ParquetLeaseCommit(TableCommit):
         )
 
     def overwrite_partitions(self, store, df, path, partition_cols,
-                             cdf_df=None) -> None:
+                             cdf_df=None, drop=()) -> None:
         """Dynamic partition overwrite: only partitions present in
         ``df`` are replaced. Set per-write (not just session-wide) —
         with a static-overwrite session default this writer would
         silently DELETE every other partition. On Delta this whole
         method is ``MERGE ... WHEN MATCHED`` / ``replaceWhere``.
 
-        ``cdf_df`` is accepted for signature parity and IGNORED: the
-        directory backend keeps no version log, so there is no change
-        feed to serve the rows to."""
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_cols)
-            .parquet(path)
-        )
+        ``drop`` directories are removed first (dynamic overwrite only
+        rewrites partitions present in the output, so emptied ones
+        are dropped explicitly). ``cdf_df`` is accepted for signature
+        parity and IGNORED: the directory backend keeps no version
+        log, so there is no change feed to serve the rows to."""
+        if drop:
+            keys = {_partition_key(k) for k in drop}
+            for d in self._partition_dirs(
+                store, path, partition_cols, keys
+            ).values():
+                store.fs.remove_tree(d)
+        if df is not None:
+            (
+                df.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(*partition_cols)
+                .parquet(path)
+            )
 
-    def drop_partition_dir(self, store, path: str) -> None:
-        """Remove one partition directory (dynamic overwrite rewrites
-        only partitions present in the output, so emptied ones are
-        dropped explicitly). On a lakehouse table: DELETE WHERE."""
-        store.fs.remove_tree(path)
+    def partition_values(self, store, path, partition_cols) -> set:
+        return set(self._partition_dirs(store, path, partition_cols))
+
+    @staticmethod
+    def _partition_dirs(store, path, partition_cols, drop=None) -> dict:
+        """``{values: dir}`` of the hive partition directories under
+        ``path`` that a ``drop`` key names, or of every partition at
+        full depth when ``drop`` is None. The walk lists only
+        directories some key still prefixes."""
+        want = None if drop is None else {
+            k[:i] for k in drop for i in range(len(k) + 1)
+        }
+        found, level = {}, {(): path}
+        for col in partition_cols:
+            below = {}
+            for vals, d in level.items():
+                if drop is not None and vals in drop:
+                    found[vals] = d
+                elif (want is None or vals in want) and store.fs.is_dir(d):
+                    for name in store.fs.listdir(d):
+                        v = _hive_values([name], [col])
+                        if v:
+                            below[vals + v] = f"{d}/{name}"
+            level = below
+        found.update(
+            (v, d) for v, d in level.items() if drop is None or v in drop
+        )
+        return found
 
     def snapshot_rewrite(self, store, path: str, write_snapshot) -> None:
         """Replace a table directory with a freshly-written snapshot,
@@ -913,19 +983,6 @@ class ManifestCommit(ParquetLeaseCommit):
         parent = path.rsplit("/", 1)[0]
         if "/" in path and self._is_root(store, parent):
             return parent, path.rsplit("/", 1)[1]
-        return None
-
-    def _resolve_walk(self, store, path: str):
-        """Walk UP from ``path`` to the nearest managed root (partition
-        paths sit up to three levels below it). Returns (root, relpath)
-        or None."""
-        probe = path
-        for _ in range(6):
-            if self._is_root(store, probe):
-                return probe, path[len(probe) + 1:]
-            if "/" not in probe:
-                break
-            probe = probe.rsplit("/", 1)[0]
         return None
 
     def _target_for_write(self, store, path: str):
@@ -1937,34 +1994,22 @@ class ManifestCommit(ParquetLeaseCommit):
 
     # -- TableCommit operations --------------------------------------------
     def append_rows(self, store, rows, schema, path: str) -> None:
+        """One staged file per call, through the same constraint gate
+        and stats derivation as every data write. Unmapped members of
+        an exact-scalar schema stage driver-side (``_write_row_batch``);
+        mapped members write their physical names through Spark."""
         target = self._target_for_write(store, path)
         if target is None:
             return super().append_rows(store, rows, schema, path)
         root, member = target
-        all_scalar = _driver_writable_fields(schema) is not None
-        if all_scalar and not self.schema_meta(store, path):
-            # unmapped member + exact-scalar schema: stage the bounded
-            # protocol-metadata batch DRIVER-SIDE (r18 — see the
-            # directory backend's append_rows); the staged file goes
-            # through the same constraint gate and stats derivation
-            def driver_write(tmp):
-                store.fs.makedirs(tmp)
-                _driver_parquet_file(
-                    rows, schema, f"{tmp}/part-00000.snappy.parquet"
-                )
-
-            files = self._stage_data(store, root, member, driver_write)
-            mutate = lambda t: {**t, member: t.get(member, []) + files}  # noqa: E731
-            mutate.stats_add = self._file_stats(store, root, member, files)
-            self._commit(store, root, mutate)
-            return
-        rdd = store.spark.sparkContext.parallelize(rows, 1)
-        df = self._to_physical(
-            store, root, member, store.spark.createDataFrame(rdd, schema)
-        )
+        physical = None
+        if self.schema_meta(store, path):
+            physical = lambda df: self._to_physical(  # noqa: E731
+                store, root, member, df
+            )
         files = self._stage_data(
             store, root, member,
-            lambda tmp: df.write.mode("overwrite").parquet(tmp),
+            lambda tmp: _write_row_batch(store, rows, schema, tmp, physical),
         )
         mutate = lambda t: {**t, member: t.get(member, []) + files}  # noqa: E731
         mutate.stats_add = self._file_stats(store, root, member, files)
@@ -2004,30 +2049,36 @@ class ManifestCommit(ParquetLeaseCommit):
         self._commit(store, root, mutate)
 
     def overwrite_partitions(self, store, df, path, partition_cols,
-                             cdf_df=None, drop_prefixes=None) -> None:
+                             cdf_df=None, drop=()) -> None:
         """Dynamic partition overwrite as one manifest commit.
 
         ``cdf_df``, if given, stages row-level change files (typed
         with ``CDF_TYPE_COL``) ATOMICALLY with the overwrite and marks
         the entry ``kind: "cdf"`` so ``read_row_changes`` serves them
-        — the hook LWW compaction and purge-ack use to tell keyed
-        mirrors exactly which rows were removed (compaction's winners
-        are content-identical, so its feed nets to pure deletes)
-        instead of forcing a full resync. Without it the entry is an
-        unmarked rewrite and row-feed consumers over the range resync
-        — the safe default for a content-changing overwrite.
+        — the hook LWW compaction, purge-ack, retention and erasure
+        use to tell keyed mirrors exactly which rows were removed
+        (compaction's winners are content-identical, so its feed nets
+        to pure deletes) instead of forcing a full resync. Without it
+        the entry is an unmarked rewrite and row-feed consumers over
+        the range resync — the safe default for a content-changing
+        overwrite.
 
-        ``drop_prefixes`` (member-relative partition dirs, e.g.
-        ``["tag=a/part_start=0"]``) removes FULLY-EMPTIED partitions'
-        files in the same entry — dynamic overwrite only replaces
-        partitions present in ``df``, so without this an eviction that
-        empties a partition needs a second commit and the feed sees a
-        torn change. ``df`` may be None when every affected partition
-        emptied (pure drop + change rows)."""
-        target = self._target_for_write(store, path)
+        ``drop`` (partition-value tuples, see ``TableCommit``) removes
+        the named partitions' files in the same entry, matched against
+        the committed file list with hive escapes decoded — dynamic
+        overwrite only replaces partitions present in ``df``, so
+        without this an eviction that empties a partition would need
+        a second commit and the feed would see a torn change. ``df``
+        may be None for a pure drop; a pure drop never creates a
+        table."""
+        target = (
+            self._target_for_write(store, path)
+            if df is not None
+            else self._resolve(store, path)
+        )
         if target is None:
             return super().overwrite_partitions(
-                store, df, path, partition_cols
+                store, df, path, partition_cols, drop=drop
             )
         root, member = target
         if df is not None:
@@ -2047,7 +2098,7 @@ class ManifestCommit(ParquetLeaseCommit):
         n = len(partition_cols)
         new_parts = {self._partition_prefix(f, n) for f in files}
         new_parts.discard(None)
-        drops = tuple(drop_prefixes or [])
+        keys = {_partition_key(k) for k in drop}
         change = (
             self._stage_cdf(store, root, member, cdf_df, None)
             if cdf_df is not None
@@ -2055,12 +2106,15 @@ class ManifestCommit(ParquetLeaseCommit):
         )
 
         def mutate(tables):
-            old = tables.get(member, [])
             kept = [
-                f for f in old
+                f for f in tables.get(member, [])
                 if self._partition_prefix(f, n) not in new_parts
-                and not any(
-                    f == p or f.startswith(p + "/") for p in drops
+                and not (
+                    keys
+                    and _is_dropped(
+                        _hive_values(f.split("/")[:-1], partition_cols),
+                        keys,
+                    )
                 )
             ]
             return {**tables, member: kept + files}
@@ -2070,27 +2124,18 @@ class ManifestCommit(ParquetLeaseCommit):
             mutate.change_meta = change
         self._commit(store, root, mutate)
 
-    def drop_partition_dir(self, store, path: str) -> None:
-        found = self._resolve_walk(store, path)
-        if found is None:
-            return super().drop_partition_dir(store, path)
-        root, rel = found
-        _, tables = self._current(store, root)
-        member = ""
-        if rel.split("/", 1)[0] in tables:
-            member, rel = rel.split("/", 1)
-
-        def mutate(tables):
-            old = tables.get(member, [])
-            return {
-                **tables,
-                member: [
-                    f for f in old
-                    if f != rel and not f.startswith(rel + "/")
-                ],
-            }
-
-        self._commit(store, root, mutate)
+    def partition_values(self, store, path, partition_cols) -> set:
+        files = self.member_files(store, path)
+        if files is None:
+            return super().partition_values(store, path, partition_cols)
+        n = len(partition_cols)
+        return {
+            v for v in (
+                _hive_values(f.split("/")[:-1], partition_cols)
+                for f in files
+            )
+            if len(v) == n
+        }
 
     def snapshot_rewrite(
         self, store, path: str, write_snapshot,

@@ -34,22 +34,21 @@ class EngineConfig:
     time partition in sort-key units (ms in practice) — the Spark analog
     of the reference's page width (``index.js:121-122``).
 
-    ``partition_cols`` controls the physical Parquet layout. The default
-    ``("tag", "part_start")`` gives Catalyst directory-level pruning on
-    both the tag and the time range — the exact metadata-only partition
+    The physical Parquet layout is fixed at ``(tag, part_start)``
+    (``schema.PARTITION_COLS``): Catalyst directory-level pruning on
+    both the tag and the time range — the metadata-only partition
     selection the reference's per-tag index ZSET performs
-    (``index.js:157-231``). At very high tag cardinality (millions of
-    series) this layout would explode into tiny directories; deployments
-    at that scale should use ``("part_start",)`` and rely on Parquet
-    min/max + sorted-by-tag files for tag pruning (set
-    ``sort_within_partitions=True``).
+    (``index.js:157-231``) — and the values tiering, retention and
+    erasure drop partitions by. At very high tag cardinality (millions
+    of series) this layout explodes into tiny directories; such a
+    deployment needs a time-only layout with tag-clustered files
+    pruned by Parquet min/max instead, and with it tag-level drops as
+    row rewrites rather than partition drops (SCALING.md).
     """
 
     root: str
     partition_width: int = DEFAULT_PARTITION_WIDTH
     purge_queue_name: str = "Purge"
-    partition_cols: tuple = ("tag", "part_start")
-    sort_within_partitions: bool = False
     max_samples_per_write: int = MAX_SAMPLES_PER_WRITE
     max_tags_per_read: int = MAX_TAGS_PER_READ
     max_tag_name_length: int = MAX_TAG_NAME_LENGTH

@@ -337,11 +337,7 @@ def update_where(
     commit = commit if commit is not None else ManifestCommit()
     cond = _cond(predicate)
 
-    managed = (
-        commit.member_files(host, path)
-        if isinstance(commit, ManifestCommit)
-        else None
-    )
+    managed = commit.member_files(host, path)
     cols_of = lambda df: set(df.columns)  # noqa: E731
 
     def updated(df):
@@ -493,11 +489,7 @@ def delete_where(
     cond = _cond(predicate)
     keep = ~F.coalesce(cond, F.lit(False))
 
-    managed = (
-        commit.member_files(host, path)
-        if isinstance(commit, ManifestCommit)
-        else None
-    )
+    managed = commit.member_files(host, path)
     if managed is None:
         if mode == "dv":
             raise ValidationError(

@@ -1007,11 +1007,7 @@ def merge_into(
         total = commit.table_file_count(host, path)
         return MergeStats(0, total, 0)
 
-    managed = (
-        commit.member_files(host, path)
-        if isinstance(commit, ManifestCommit)
-        else None
-    )
+    managed = commit.member_files(host, path)
     if managed is None:
         if mode == "dv":
             raise ValidationError(
@@ -1311,11 +1307,7 @@ def delete_rows(
     commit = commit if commit is not None else ManifestCommit()
     dk = delete_keys.select(*keys).distinct()
 
-    managed = (
-        commit.member_files(host, path)
-        if isinstance(commit, ManifestCommit)
-        else None
-    )
+    managed = commit.member_files(host, path)
     if managed is None:
         if mode == "dv":
             raise ValidationError(
@@ -1445,11 +1437,7 @@ def delete_range(
     if hi is not None:
         cond = cond & (F.col(column) <= F.lit(hi))
 
-    managed = (
-        commit.member_files(host, path)
-        if isinstance(commit, ManifestCommit)
-        else None
-    )
+    managed = commit.member_files(host, path)
     if managed is None:
         if mode == "dv":
             raise ValidationError(
@@ -1579,11 +1567,7 @@ def replace_range(
             "the predicate it replaces"
         )
 
-    managed = (
-        commit.member_files(host, path)
-        if isinstance(commit, ManifestCommit)
-        else None
-    )
+    managed = commit.member_files(host, path)
     if managed is None:
         cur = commit.read_table(host, path, None)
         out = cur.where(~cond | F.col(column).isNull()).unionByName(

@@ -265,13 +265,7 @@ def zorder_rewrite(
         if c not in cur.columns:
             raise ValidationError(f"zorder_rewrite: no column {c!r}")
     b = bounds if bounds is not None else column_bounds(cur, cols)
-    pcols = (
-        partition_cols_of(
-            (commit.member_files(host, path) or [])
-            if isinstance(commit, ManifestCommit)
-            else []
-        )
-    )
+    pcols = partition_cols_of(commit.member_files(host, path) or [])
     clustered = (
         cur.withColumn("_zkey", zorder_key(cols, b, bits))
         .repartitionByRange(max(1, int(target_files)), "_zkey")

@@ -517,16 +517,15 @@ def _refresh_locked(
     )
     # Dynamic overwrite only rewrites tag partitions PRESENT in
     # merged: a touched tag whose every bucket emptied (fully
-    # tombstoned) would otherwise keep its stale rollup rows — drop
-    # those tag directories explicitly (bounded by max_tags).
+    # tombstoned) would otherwise keep its stale rollup rows — the
+    # same commit drops those tags (bounded by max_tags).
     present = {r.tag for r in merged.select("tag").distinct().collect()}
-    for r in selected:
-        if r.tag not in present:
-            store.commit.drop_partition_dir(
-                store, f"{data_path}/tag={r.tag}"
-            )
-    if present:
-        store.commit.overwrite_partitions(store, merged, data_path, ["tag"])
+    emptied = {(r.tag,) for r in selected if r.tag not in present}
+    if present or emptied:
+        store.commit.overwrite_partitions(
+            store, merged if present else None, data_path, ["tag"],
+            drop=emptied,
+        )
 
     if capped:
         last = selected[-1]

@@ -77,3 +77,13 @@ COLD_SNAPSHOT_SCHEMA = T.StructType(
     [T.StructField("purge_id", T.StringType(), nullable=False)]
     + list(SAMPLE_SCHEMA.fields)
 )
+
+# Physical hive layout of the hot tier: directory-level pruning on both
+# the tag and the time range, the metadata-only partition selection the
+# reference's per-tag index ZSET performs (``index.js:157-231``). Fixed:
+# tiering, retention and erasure drop partitions by these values.
+PARTITION_COLS = ("tag", "part_start")
+
+# Cold snapshot layout: the purge id leads, so an ack reads back exactly
+# the members its mark snapshotted.
+COLD_PARTITION_COLS = ("purge_id", *PARTITION_COLS)

@@ -561,15 +561,9 @@ def sql(spark_or_host, statement: str, commit=None) -> DataFrame:
             if pcols and set(pcols) <= set(df.columns):
                 # replacing a hive-partitioned member: keep its
                 # layout (dynamic overwrite + drop of every prior
-                # partition dir, one atomic entry)
-                prefixes = sorted(
-                    {
-                        "/".join(f.split("/")[: len(pcols)])
-                        for f in cur_files
-                    }
-                )
+                # partition, one atomic entry)
                 commit.overwrite_partitions(
-                    host, df, path, pcols, drop_prefixes=prefixes
+                    host, df, path, pcols, drop=[()]
                 )
             else:
                 commit.replace_tables(host, path, {"": df})
@@ -892,15 +886,9 @@ def sql(spark_or_host, statement: str, commit=None) -> DataFrame:
             if pcols:
                 # full overwrite preserving the hive layout: dynamic
                 # overwrite of df's partitions + drop of every prior
-                # partition dir, one atomic entry
-                prefixes = sorted(
-                    {
-                        "/".join(f.split("/")[: len(pcols)])
-                        for f in managed
-                    }
-                )
+                # partition, one atomic entry
                 commit.overwrite_partitions(
-                    host, df, path, pcols, drop_prefixes=prefixes
+                    host, df, path, pcols, drop=[()]
                 )
             else:
                 commit.replace_tables(host, path, {"": df})

@@ -62,6 +62,7 @@ from redis_lsm_timeseries_spark.errors import (
 from redis_lsm_timeseries_spark.operators.lww import lww_latest
 from redis_lsm_timeseries_spark.schema import (
     MEMBER_IDENTITY_COLS,
+    PARTITION_COLS,
     SAMPLE_SCHEMA,
 )
 
@@ -408,16 +409,12 @@ class TimeseriesStore:
         self, df: DataFrame, app_meta: dict | None = None,
         expected_app: dict | None = None,
     ) -> None:
-        writer = df
-        if self.config.sort_within_partitions:
-            writer = df.sortWithinPartitions("tag", "ts")
         if self._hot_is_manifest():
             # Transactional L1: one atomic manifest commit per append
             # (creates the version log on the first write); app_meta
             # rides the same entry — the streaming batch cursor.
             self.commit.append_partitioned(
-                self, writer, self.config.hot_path,
-                list(self.config.partition_cols),
+                self, df, self.config.hot_path, PARTITION_COLS,
                 app_meta=app_meta, expected_app=expected_app,
             )
         else:
@@ -428,23 +425,18 @@ class TimeseriesStore:
                     " directory sink keeps no metadata map"
                 )
             (
-                writer.write.mode("append")
-                .partitionBy(*self.config.partition_cols)
+                df.write.mode("append")
+                .partitionBy(*PARTITION_COLS)
                 .parquet(self.config.hot_path)
             )
         self.invalidate_hot_cache()
 
     def _append_l0(self, df: DataFrame) -> None:
-        # coalesce(1): one segment file per batch, and the
-        # sortWithinPartitions becomes a global (tag, ts) sort of the
-        # segment — maximal row-group pruning. Cheap here because the
-        # input is Arrow batches already in the JVM (unlike coalescing
-        # a Python-parallelized DataFrame, see tiering._append_log).
-        writer = df.coalesce(1)
-        if self.config.sort_within_partitions:
-            writer = writer.sortWithinPartitions("tag", "ts")
+        # coalesce(1): one segment file per batch. Cheap here because
+        # the input is Arrow batches already in the JVM (unlike
+        # coalescing a Python-parallelized DataFrame).
         (
-            writer.write.mode("append")
+            df.coalesce(1).write.mode("append")
             # No _SUCCESS marker for L0 segments: nothing reads it
             # (hot() lists segment files; staleness tokens hash the
             # listing) and flush_l0 deletes it — which RACED a

@@ -32,7 +32,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from redis_lsm_timeseries_spark.errors import ConcurrentMaintenanceError
-from redis_lsm_timeseries_spark.schema import SAMPLE_SCHEMA, WRITE_SCHEMA
+from redis_lsm_timeseries_spark.schema import (
+    PARTITION_COLS,
+    SAMPLE_SCHEMA,
+    WRITE_SCHEMA,
+)
 from redis_lsm_timeseries_spark.store import TimeseriesStore
 
 
@@ -107,7 +111,7 @@ def start_hot_ingest(
         enriched.writeStream.format("parquet")
         .option("path", store.config.hot_path)
         .option("checkpointLocation", checkpoint_dir)
-        .partitionBy(*store.config.partition_cols)
+        .partitionBy(*PARTITION_COLS)
         .outputMode("append")
     )
     if available_now:

@@ -50,9 +50,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from redis_lsm_timeseries_spark.errors import ValidationError
 from redis_lsm_timeseries_spark.schema import (
+    COLD_PARTITION_COLS,
     COLD_SNAPSHOT_SCHEMA,
     LWW_ORDER_COLS,
     MEMBER_IDENTITY_COLS,
+    PARTITION_COLS,
     PURGE_LOG_SCHEMA,
     SAMPLE_SCHEMA,
 )
@@ -230,40 +232,13 @@ def purge_scan(
             "purge_id", *[f.name for f in SAMPLE_SCHEMA.fields]
         ).repartition("purge_id"),
         store.config.cold_path,
-        ["purge_id", "tag", "part_start"],
+        COLD_PARTITION_COLS,
     )
     _append_log(
         store,
         [(m.purge_id, m.tag, m.part_start, "marked", now_ms, m.n_rows) for m in marks],
     )
     return marks
-
-
-def _hot_partition_prefixes(
-    store: TimeseriesStore, parts: set[tuple], depth: int = 2
-) -> list[str]:
-    """Member-relative hive prefixes of the given partition-value
-    tuples (``depth`` leading hive segments — (tag, part_start) pairs
-    by default, tag-only with depth=1), derived from the manifest's
-    OWN file paths (so hive ``%XX``-escaped values match byte-for-byte
-    — a hand-built ``tag={tag}`` string would miss them)."""
-    if not parts:
-        return []
-    from redis_lsm_timeseries_spark.commit import ManifestCommit
-
-    want = {tuple(str(x) for x in t) for t in parts}
-    prefixes: set[str] = set()
-    for f in store.commit.member_files(store, store.config.hot_path) or []:
-        segs = f.split("/")
-        if len(segs) <= depth:
-            continue
-        vals = tuple(
-            ManifestCommit._unescape_partition(s.partition("=")[2])
-            for s in segs[:depth]
-        )
-        if vals in want:
-            prefixes.add("/".join(segs[:depth]))
-    return sorted(prefixes)
 
 
 def purge_ack(
@@ -369,13 +344,12 @@ def purge_ack_many(
             (F.col("tag") == tag) & (F.col("part_start") == part_start)
         )
     hot_parts = store.hot().where(part_pred)
-    if store.commit.tracks_changes(store, store.config.hot_path):
-        # the manifest branch consumes the marked partitions TWICE
-        # (the remainder anti-join and the evicted-rows semi-join for
-        # the CDF) — materialize the slice once, lazily: the
-        # nonempty-partition collect below is the materializing action
-        # (r18, guide §2.3; single-consumer directory mode skips the
-        # cache)
+    tracked = store.commit.tracks_changes(store, store.config.hot_path)
+    if tracked:
+        # the change rows consume the marked partitions a SECOND time
+        # (the remainder anti-join and the evicted-rows semi-join) —
+        # materialize the slice once, lazily: the nonempty-partition
+        # collect below is the materializing action
         hot_parts = hot_parts.localCheckpoint(eager=False)
     remainder = hot_parts.join(
         F.broadcast(snapshot), on=MEMBER_IDENTITY_COLS, how="left_anti"
@@ -383,9 +357,8 @@ def purge_ack_many(
     # Materialize before overwriting the directories we just read
     # (Spark refuses / corrupts a self-overwrite otherwise). LAZY
     # checkpoint: the nonempty-partition collect right below is the
-    # materializing action (r18, guide §1.2 — the r17 components
-    # pattern), so the ack pays one job here instead of two; the
-    # overwrite still reads materialized rows.
+    # materializing action, so the ack pays one job here instead of
+    # two; the overwrite still reads materialized rows.
     remaining = remainder.select(
         *[f.name for f in SAMPLE_SCHEMA.fields]
     ).localCheckpoint(eager=False)
@@ -393,42 +366,29 @@ def purge_ack_many(
         (r.tag, r.part_start)
         for r in remaining.select("tag", "part_start").distinct().collect()
     }
-    if store.commit.tracks_changes(store, store.config.hot_path):
-        # Manifest backend: ONE atomic commit carries the partition
-        # rewrites, the emptied-partition drops, AND the evicted rows
-        # as typed CDF deletes — a keyed mirror of the hot table
-        # consumes the eviction as O(evicted) row deletes instead of
-        # a full resync, and no feed version ever shows a torn ack
-        # (rows gone from one partition but not yet another).
-        evicted = hot_parts.join(
-            F.broadcast(snapshot), on=MEMBER_IDENTITY_COLS, how="left_semi"
-        ).withColumn(store.commit.CDF_TYPE_COL, F.lit("delete"))
+    # ONE commit rewrites the acked partitions and drops the emptied
+    # ones. On a change-tracking backend the evicted rows ride the same
+    # entry as typed CDF deletes — a keyed mirror of the hot table
+    # consumes the eviction as O(evicted) row deletes instead of a full
+    # resync, and no feed version shows a torn ack.
+    evicted = None
+    if tracked:
         n_rows = sum(marks[pid][2] for pid in valid)
-        store.commit.overwrite_partitions(
-            store,
-            remaining if nonempty else None,
-            store.config.hot_path,
-            store.config.partition_cols,
-            cdf_df=evicted.coalesce(max(1, min(32, n_rows // 1_000_000 + 1))),
-            drop_prefixes=_hot_partition_prefixes(store, affected - nonempty),
+        evicted = (
+            hot_parts.join(
+                F.broadcast(snapshot), on=MEMBER_IDENTITY_COLS, how="left_semi"
+            )
+            .withColumn(store.commit.CDF_TYPE_COL, F.lit("delete"))
+            .coalesce(max(1, min(32, n_rows // 1_000_000 + 1)))
         )
-    else:
-        for tag, part_start in affected - nonempty:
-            # Partition fully evicted: dynamic overwrite rewrites only
-            # partitions present in the output, so drop emptied ones
-            # here.
-            store.commit.drop_partition_dir(
-                store,
-                f"{store.config.hot_path}/tag={tag}/part_start={part_start}",
-            )
-        if nonempty:
-            # Only the acked partitions' directories are replaced — see
-            # ParquetLeaseCommit.overwrite_partitions for the per-write
-            # dynamic-overwrite requirement.
-            store.commit.overwrite_partitions(
-                store, remaining, store.config.hot_path,
-                store.config.partition_cols,
-            )
+    store.commit.overwrite_partitions(
+        store,
+        remaining if nonempty else None,
+        store.config.hot_path,
+        PARTITION_COLS,
+        cdf_df=evicted,
+        drop=affected - nonempty,
+    )
     store.invalidate_hot_cache()
     _append_log(
         store,
@@ -628,8 +588,7 @@ def compact(
         excess = max(0, rows_before - rows_after)
         cdf = losers.coalesce(max(1, min(32, excess // 1_000_000 + 1)))
     store.commit.overwrite_partitions(
-        store, winners, store.config.hot_path,
-        store.config.partition_cols, cdf_df=cdf,
+        store, winners, store.config.hot_path, PARTITION_COLS, cdf_df=cdf,
     )
     store.invalidate_hot_cache()
     return CompactionMetrics(
@@ -711,57 +670,48 @@ def apply_retention(
         .collect()
     )
     rows = sum(r.n for r in doomed)
-    if doomed and store.commit.tracks_changes(store, store.config.hot_path):
-        # manifest-hot (r13): ONE atomic commit drops every expired
-        # partition and stages the dropped rows as typed CDF deletes —
-        # a keyed mirror consumes retention as O(expired rows) instead
-        # of a full resync, and no feed version shows a half-applied
-        # sweep. The CDF read is bounded by what is being deleted
-        # (exactly the mirror's delta), not the table.
+    if doomed:
+        # ONE commit drops every expired partition. On a change-tracking
+        # backend the dropped rows ride the same entry as typed CDF
+        # deletes — a keyed mirror consumes retention as O(expired
+        # rows) instead of a full resync, and no feed version shows a
+        # half-applied sweep.
         pairs = {(r.tag, r.part_start) for r in doomed}
-        keys_df = store.spark.createDataFrame(
-            sorted(pairs), "tag string, part_start long"
-        )
-        # committed L1 rows only (racing L0 rows were never in the
-        # manifest; they flush later and survive as inserts)
-        victims = store.commit.read_table(
-            store, store.config.hot_path, SAMPLE_SCHEMA
-        ).join(
-            F.broadcast(keys_df), ["tag", "part_start"], "left_semi"
-        ).withColumn(store.commit.CDF_TYPE_COL, F.lit("delete"))
+        victims = None
+        if store.commit.tracks_changes(store, store.config.hot_path):
+            keys_df = store.spark.createDataFrame(
+                sorted(pairs), "tag string, part_start long"
+            )
+            # committed L1 rows only (racing L0 rows were never in the
+            # manifest; they flush later and survive as inserts)
+            victims = (
+                store.commit.read_table(
+                    store, store.config.hot_path, SAMPLE_SCHEMA
+                )
+                .join(F.broadcast(keys_df), ["tag", "part_start"], "left_semi")
+                .withColumn(store.commit.CDF_TYPE_COL, F.lit("delete"))
+                .coalesce(max(1, min(32, rows // 1_000_000 + 1)))
+            )
         store.commit.overwrite_partitions(
-            store,
-            None,
-            store.config.hot_path,
-            store.config.partition_cols,
-            cdf_df=victims.coalesce(max(1, min(32, rows // 1_000_000 + 1))),
-            drop_prefixes=_hot_partition_prefixes(store, pairs),
+            store, None, store.config.hot_path, PARTITION_COLS,
+            cdf_df=victims, drop=pairs,
         )
         store.invalidate_hot_cache()
-    else:
-        for r in doomed:
-            store.commit.drop_partition_dir(
-                store,
-                f"{store.config.hot_path}/tag={r.tag}"
-                f"/part_start={r.part_start}",
-            )
-        if doomed:
-            store.invalidate_hot_cache()
     if drop_cold:
-        cold_doomed = (
-            cold_snapshots(store)
+        cold_doomed = {
+            (r.purge_id, r.tag, r.part_start)
+            for r in cold_snapshots(store)
             .where(
                 F.col("part_start") + F.lit(w) <= F.lit(int(older_than_ms))
             )
-            .select("purge_id", "tag", "part_start")
+            .select(*COLD_PARTITION_COLS)
             .distinct()
             .collect()
-        )
-        for r in cold_doomed:
-            store.commit.drop_partition_dir(
-                store,
-                f"{store.config.cold_path}/purge_id={r.purge_id}"
-                f"/tag={r.tag}/part_start={r.part_start}",
+        }
+        if cold_doomed:
+            store.commit.overwrite_partitions(
+                store, None, store.config.cold_path, COLD_PARTITION_COLS,
+                drop=cold_doomed,
             )
     return RetentionMetrics(len(doomed), rows)
 
@@ -786,18 +736,15 @@ def delete_series(
     job; idempotent (a second call finds nothing).
 
     Cost shape per tier:
-    - hot: partition-dir drops — ``tag=X`` is a directory prefix, so
+    - hot and cold: partition drops by value through the commit
+      seam — ``tag`` is a partition column of both layouts, so
       erasure is metadata-only, no rewrite (L0 folded first so no
       staged rows survive);
-    - cold: ``delete_rows`` on the manifest member — per-file tag
-      stats (hive min==max) prune to exactly the tag's files, which
-      drop without replacement (a cold file holds one partition of
-      one tag);
     - purge log: the log ROWS name the tags (marked/acked history),
-      so GDPR requires scrubbing them too — same stats-pruned
-      row-level delete; an unacked mark for an erased tag simply
-      acks to nothing later;
-    - rollups: aggregates keyed by the tag are partition-dir drops;
+      so GDPR requires scrubbing them too — a row-level delete
+      (stats-pruned on manifest tables); an unacked mark for an
+      erased tag simply acks to nothing later;
+    - rollups: aggregates keyed by the tag are partition drops too;
       the watermark is untouched — erased rows cannot resurface
       because the base tiers no longer hold them.
 
@@ -818,81 +765,50 @@ def delete_series(
             raise ValidationError(f"delete_series: invalid tag {t!r}")
     store.flush_l0()
 
-    # hot: drop each tag's partition directory tree
-    hot_dropped = 0
-    if store.commit.tracks_changes(store, store.config.hot_path):
-        # manifest-hot (r13): a physical `{hot}/tag=X` probe would
-        # MISS (data lives under the manifest's data/ root) and the
-        # erasure would silently skip the hot tier. Resolve the tag's
-        # committed files instead and erase them in ONE atomic commit
-        # with typed CDF deletes — keyed mirrors consume the erasure
-        # as O(erased rows).
-        want = {str(t) for t in sorted(set(tags))}
-        tag_prefixes = set(
-            _hot_partition_prefixes(store, {(t,) for t in want}, depth=1)
-        )
-        # partition count = distinct 2-level prefixes under the tags
-        part_prefixes = {
-            "/".join(f.split("/")[:2])
-            for f in store.commit.member_files(
-                store, store.config.hot_path
-            ) or []
-            if f.split("/", 1)[0] in tag_prefixes and f.count("/") >= 2
+    want = set(tags)
+
+    def erase(path, cols, read=None) -> int:
+        """Drop every partition of ``path`` whose tag is erased, in one
+        commit; returns how many partitions (at ``cols`` depth)."""
+        at = cols.index("tag")
+        doomed = {
+            v for v in store.commit.partition_values(store, path, cols)
+            if v[at] in want
         }
-        if tag_prefixes:
-            victims = store.commit.read_table(
-                store, store.config.hot_path, SAMPLE_SCHEMA
-            ).where(
-                F.col("tag").isin(sorted(want))
-            ).withColumn(store.commit.CDF_TYPE_COL, F.lit("delete"))
+        if doomed:
+            cdf = None
+            if read is not None and store.commit.tracks_changes(store, path):
+                cdf = (
+                    read()
+                    .where(F.col("tag").isin(sorted(want)))
+                    .withColumn(store.commit.CDF_TYPE_COL, F.lit("delete"))
+                    .coalesce(4)
+                )
             store.commit.overwrite_partitions(
-                store,
-                None,
-                store.config.hot_path,
-                store.config.partition_cols,
-                cdf_df=victims.coalesce(4),
-                drop_prefixes=sorted(tag_prefixes),
+                store, None, path, cols, cdf_df=cdf,
+                drop={v[: at + 1] for v in doomed},
             )
-            hot_dropped = len(part_prefixes)
-    else:
-        for t in sorted(set(tags)):
-            tag_dir = f"{store.config.hot_path}/tag={t}"
-            if store.fs.exists(tag_dir):
-                n_parts = len(store.fs.listdir(tag_dir))
-                store.commit.drop_partition_dir(store, tag_dir)
-                hot_dropped += n_parts
+        return len(doomed)
+
+    # hot and cold: metadata-only partition drops; on change-tracking
+    # tables the erased rows ride the same commit as typed CDF deletes,
+    # so keyed mirrors consume the erasure as O(erased rows)
+    hot_dropped = erase(
+        store.config.hot_path, PARTITION_COLS,
+        lambda: store.commit.read_table(
+            store, store.config.hot_path, SAMPLE_SCHEMA
+        ),
+    )
     if hot_dropped:
         store.invalidate_hot_cache()
-
-    # cold + purge log: stats-pruned row-level deletes
-    tag_df = store.spark.createDataFrame(
-        [(t,) for t in sorted(set(tags))], "tag string"
+    cold_files = erase(
+        store.config.cold_path, COLD_PARTITION_COLS[:2],
+        lambda: cold_snapshots(store),
     )
+
+    # purge log: stats-pruned row-level delete
     from redis_lsm_timeseries_spark.commit import ManifestCommit
 
-    cold_files = 0
-    if store.commit.table_exists(store, store.config.cold_path):
-        if isinstance(store.commit, ManifestCommit):
-            st = delete_rows(
-                store, store.config.cold_path, tag_df, ["tag"],
-                commit=store.commit,
-            )
-            cold_files = max(0, st.files_rewritten)
-        else:
-            # directory mode: the cold layout is purge_id/tag/
-            # part_start dirs — a tag erasure is a subtree drop per
-            # snapshot, metadata-only and layout-preserving (a flat
-            # row-rewrite would strip the hive dirs retention's
-            # partition-granular sweep depends on)
-            cp = store.config.cold_path
-            for pid in sorted(store.fs.listdir(cp)):
-                if not pid.startswith("purge_id="):
-                    continue
-                for t in sorted(set(tags)):
-                    tdir = f"{cp}/{pid}/tag={t}"
-                    if store.fs.exists(tdir):
-                        store.commit.drop_partition_dir(store, tdir)
-                        cold_files += 1
     log_removed = 0
     if store.commit.table_exists(store, store.config.purge_log_path):
         # metadata-first count: when every log file's stats PROVE its
@@ -912,6 +828,9 @@ def delete_series(
                 F.col("tag").isin([str(t) for t in tags])
             ).count()
         if before:
+            tag_df = store.spark.createDataFrame(
+                [(t,) for t in sorted(want)], "tag string"
+            )
             delete_rows(
                 store, store.config.purge_log_path, tag_df, ["tag"],
                 commit=store.commit,
@@ -924,13 +843,8 @@ def delete_series(
     if store.fs.exists(rollup_base):
         for name in sorted(store.fs.listdir(rollup_base)):
             data_path = f"{rollup_base}/{name}/data"
-            touched = False
-            for t in sorted(set(tags)):
-                tdir = f"{data_path}/tag={t}"
-                if store.commit.table_exists(store, data_path):
-                    store.commit.drop_partition_dir(store, tdir)
-                    touched = True
-            if touched:
+            if store.commit.table_exists(store, data_path):
+                erase(data_path, ("tag",))
                 swept += 1
     return SeriesDeletionMetrics(
         hot_dropped, cold_files, log_removed, swept

@@ -71,8 +71,8 @@ def _install(spark):
     for cls in (C.ParquetLeaseCommit, C.ManifestCommit):
         for name in (
             "append_rows", "append_partitioned", "overwrite_partitions",
-            "snapshot_rewrite", "vacuum", "drop_partition_dir",
-            "append_tables", "replace_tables", "_commit", "_stage_in",
+            "snapshot_rewrite", "vacuum", "append_tables",
+            "replace_tables", "_commit", "_stage_in",
             "_write_checkpoint", "rewrite_files", "stage_dv",
             "dv_positions", "scan_member_subset", "prune_files",
             "read_table",

@@ -86,9 +86,17 @@ def pytest_collection_modifyitems(config, items):
     import pytest as _pytest
 
     slow = _pytest.mark.slow
+    # a SLOW_FILES file named on the command line (``pytest
+    # tests/test_tiering.py`` or ``...::TestX``) is what the caller asked
+    # for — left unmarked it runs, instead of collecting 0 tests under
+    # the default ``-m "not slow"``; directory runs (``pytest tests/``)
+    # keep the tiering unchanged
+    named = {
+        os.path.basename(a.split("::", 1)[0]) for a in config.args
+    }
     for item in items:
         fname = os.path.basename(str(item.fspath))
-        if fname in SLOW_FILES:
+        if fname in SLOW_FILES and fname not in named:
             item.add_marker(slow)
         else:
             base = item.name.split("[", 1)[0]

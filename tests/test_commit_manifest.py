@@ -246,7 +246,9 @@ class TestPartitionOps:
     def test_drop_partition_is_a_manifest_edit(self, mstore):
         path = _table(mstore, "part")
         self._overwrite(mstore, path, [("x", 1), ("y", 2)])
-        mstore.commit.drop_partition_dir(mstore, f"{path}/p=x")
+        mstore.commit.overwrite_partitions(
+            mstore, None, path, ["p"], drop=[("x",)]
+        )
         assert self._vals(mstore, path) == {("y", 2)}
         # physical file still on disk until an aggressive vacuum
         # (immutable data; default retention keeps it for readers of

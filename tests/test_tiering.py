@@ -514,13 +514,11 @@ class TestCommitSeam:
                 calls.append("append")
                 super().append_rows(store, rows, schema, path)
 
-            def overwrite_partitions(self, store, df, path, cols):
+            def overwrite_partitions(self, store, df, path, cols, **kw):
                 calls.append("overwrite")
-                super().overwrite_partitions(store, df, path, cols)
-
-            def drop_partition_dir(self, store, path):
-                calls.append("drop")
-                super().drop_partition_dir(store, path)
+                if kw.get("drop"):
+                    calls.append("drop")
+                super().overwrite_partitions(store, df, path, cols, **kw)
 
             def snapshot_rewrite(self, store, path, write_snapshot):
                 calls.append("rewrite")
@@ -533,8 +531,9 @@ class TestCommitSeam:
         marks = purge_scan(s, 0, 10, now_ms=T0 + 1_000)
         assert marks
         assert "lock" in calls and "append" in calls
-        # ack a fully-evicted partition -> drop; write survivors first
-        # so another partition keeps rows -> overwrite
+        # ack a fully-evicted partition -> the overwrite's drop leg;
+        # write survivors first so another partition keeps rows ->
+        # overwrite
         s.write([("GapTag", 11, "Eleven")], ingest_ts=T0 + 2_000)
         acked = purge_ack_many(s, [m.purge_id for m in marks])
         assert all(acked.values())
