@@ -216,7 +216,7 @@ def main() -> int:
     try:
         extras = extras_bench(spark, sf_dir)
     except Exception as exc:
-        extras = {"error": f"{type(exc).__name__}: {exc}"[:200]}
+        extras = {"error": f"FAILED {type(exc).__name__}: {exc}"[:200]}
     log(f"extras: {extras}")
 
     norm = normalized_vs_prev(
@@ -320,23 +320,7 @@ def main() -> int:
     compact.pop("query_t_sec", None)
     compact.pop("queries_draws", None)  # full record keeps both draws
     compact.pop("queries_jobs_draws", None)  # full record keeps them
-    # timings are rounded floats; int-valued extras (cc_rounds,
-    # cc_edges_round_N) are metrics, not durations — keep them out of
-    # the shed-path total_sec
-    ok_times = [
-        v
-        for k, v in extras.items()
-        if isinstance(v, float) and not isinstance(v, bool)
-    ]
-    compact["extras"] = {
-        k: (round(v, 2) if isinstance(v, (int, float)) else "ERR")
-        for k, v in extras.items()
-    }
-    extras_summary = {
-        "n": len(extras),
-        "ok": len(ok_times),
-        "total_sec": round(sum(ok_times), 2),
-    }
+    compact["extras"], extras_summary = summarize_extras(extras)
     shed = [
         ("sf1_normalized_vs_prev", None),
         ("extras", extras_summary),
@@ -631,6 +615,31 @@ def normalized_vs_prev(
         except Exception:
             continue
     return {"prev": None, "reason": "no prior round with calibration"}
+
+
+def summarize_extras(extras: dict) -> tuple[dict, dict]:
+    """(compact extras, summary) for the capture-window line. Only a
+    ``"FAILED ..."`` string is an error (shown as ``"ERR"``); int and
+    str facts (``cc_rounds``, ``"29/32"``) are results, shown as they
+    are. ``total_sec`` sums the float timings only: int extras are
+    counts, not durations."""
+    def failed(v):
+        return isinstance(v, str) and v.startswith("FAILED")
+
+    compact = {
+        k: "ERR" if failed(v) else round(v, 2) if isinstance(v, float) else v
+        for k, v in extras.items()
+    }
+    n_failed = sum(1 for v in extras.values() if failed(v))
+    summary = {
+        "n": len(extras),
+        "ok": len(extras) - n_failed,
+        "failed": n_failed,
+        "total_sec": round(
+            sum(v for v in extras.values() if isinstance(v, float)), 2
+        ),
+    }
+    return compact, summary
 
 
 def sf1_normalized_vs_prev(extras: dict, calibration: dict) -> dict:

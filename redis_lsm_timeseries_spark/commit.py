@@ -143,7 +143,11 @@ def _write_row_batch(store, rows: list[tuple], schema, dest_dir: str,
     pure fixed cost at any scale; real table formats write commit
     metadata driver-side for exactly this reason (Delta's JSON
     actions). The parquet shape matches the Spark writer where it
-    matters for reads: snappy compression, all fields optional.
+    matters for reads: snappy compression, all fields optional. The
+    file is written under a hidden in-flight name (Spark's listing
+    and the engine's protocols skip ``.``-prefixed names) and
+    published by one atomic ``fs.rename``, so no reader ever sees a
+    partial file; a crashed write leaves only the inert hidden file.
 
     Anything else is a single-slice Spark write (``physical`` maps the
     DataFrame onto stored column names). Single-slice parallelize,
@@ -168,11 +172,20 @@ def _write_row_batch(store, rows: list[tuple], schema, dest_dir: str,
         [pa.array(list(c), type=t) for c, (_, t) in zip(cols, pa_fields)],
         schema=pa.schema(pa_fields),
     )
-    store.fs.makedirs(dest_dir)
-    pq.write_table(
-        table, f"{dest_dir}/part-{uuid.uuid4().hex}.snappy.parquet",
-        compression="snappy",
-    )
+    name = f"part-{uuid.uuid4().hex}.snappy.parquet"
+    inflight = f"{dest_dir}/.{name}.inflight"
+    for attempt in range(2):
+        store.fs.makedirs(dest_dir)
+        try:
+            pq.write_table(table, inflight, compression="snappy")
+            break
+        except FileNotFoundError:
+            # a concurrent cleanup (flush_l0's rmdir of an emptied L0
+            # root) retired the dir between makedirs and the open;
+            # the in-flight file, once created, keeps it alive
+            if attempt:
+                raise
+    store.fs.rename(inflight, f"{dest_dir}/{name}")
 
 
 def _partition_key(values) -> tuple[str, ...]:

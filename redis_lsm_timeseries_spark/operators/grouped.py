@@ -42,7 +42,8 @@ def per_group_linear_trend(
     (tag, n_points, slope) with slope = (n*Sxy - Sx*Sy) / (n*Sxx - Sx^2)
     computed in exact integer arithmetic, each side rounded to double
     only at the final division — bit-identical to a SQL engine summing
-    in 128-bit integers.
+    in 128-bit integers. A non-integer column is accepted only when
+    every value is integral; a fractional value or NaN raises.
 
     Scale shape: one shuffle on the group key; each group streams
     through a worker as Arrow batches. The closure is self-contained
@@ -62,14 +63,24 @@ def per_group_linear_trend(
         # the boundary stays, the Python-per-row work goes).
         # tolist() is exact ONLY for integer dtypes: nulls upcast the
         # column to float64 and a float column would silently degrade
-        # the arbitrary-precision sums to float (ADVICE r17). Non-int
-        # input goes through int(v) per element — exact for the
-        # float-that-is-an-integer case, loud (ValueError on NaN) for
-        # anything broken — instead of silently accumulating floats.
+        # the arbitrary-precision sums to float. Non-int input is
+        # converted per element — exact for the float-that-is-an-
+        # integer case, a ValueError for anything else (NaN, or a
+        # fractional value int() would silently truncate: 2.5 -> 2
+        # biases the slope).
+        def exact_int(col, v):
+            i = int(v)
+            if i != v:
+                raise ValueError(
+                    f"per_group_linear_trend: {col} value {v!r} is not "
+                    "integral; scale it to an integer column first"
+                )
+            return i
+
         def ints(col):
             vals = pdf[col].tolist()
             if pdf[col].dtype.kind not in ("i", "u"):
-                vals = [int(v) for v in vals]
+                vals = [exact_int(col, v) for v in vals]
             return vals
 
         xs = ints(x_col)

@@ -25,14 +25,17 @@ Physical layout — a two-level LSM:
   predicate pushed to row-group min/max — strictly better (SURVEY.md
   §4 P9). Bulk loads (``write_df``) land here directly, clustered.
 - L0 ``{root}/{settings-hash}/hot_l0``: flat Parquet segments, ONE
-  file per row-batch ``write()``, globally sorted by (tag, ts) so
-  row-group stats prune reads. The memtable-flush analog of the
-  reference's append-first LSM posture (``recipe:19-20``);
-  ``flush_l0`` (called by ack/compact maintenance) folds segments
-  into L1.
+  file per row-batch ``write()``, sorted by (tag, ts) and written on
+  the driver with pyarrow — no Spark job — then published by an
+  atomic rename, so no reader sees a partial segment. The
+  memtable-flush analog of the reference's append-first LSM posture
+  (``recipe:19-20``); ``flush_l0`` (called by ack/compact
+  maintenance) folds segments into L1.
 
-Reads union both tiers and cache the table handle per store instance
-(mutators invalidate), so repeated point reads skip the file listing.
+Reads union both tiers. Each tier's table handle is cached per store
+instance under its own layout token, so a ``write()`` re-lists only
+the flat L0 directory and the L1 file index (one Spark listing job
+over many partition dirs) survives until L1 itself changes.
 """
 
 from __future__ import annotations
@@ -45,6 +48,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from redis_lsm_timeseries_spark.commit import _write_row_batch
 from redis_lsm_timeseries_spark.config import (
     MAX_PAGE_NAME_LENGTH,
     EngineConfig,
@@ -117,17 +121,19 @@ class TimeseriesStore:
         # Instance id: the reference derives a shortid per store instance
         # (index.js:58) used in the member uniquifier.
         self.writer_id = uuid.uuid4().hex[:8]
-        # In-process hot-table handle cache: re-listing the partitioned
-        # table per read is the dominant point-read cost. Every mutator
-        # in this module and tiering.py invalidates it explicitly, and
-        # the cache self-validates against a layout mtime token (hot
-        # root, its _spark_metadata streaming-commit dir, L0 root), so
-        # any Spark writer — including an external streaming sink on
-        # hot_path — is picked up on the next read. Residual caveat: a
-        # non-Spark tool dropping a bare file into an EXISTING partition
-        # subdirectory bumps none of the watched mtimes; call
-        # invalidate_hot_cache() after such writes.
-        self._hot_cache: tuple[tuple, DataFrame] | None = None
+        # In-process hot-table handle cache, one entry per tier
+        # ("l1", "l0") holding (layout token, DataFrames): re-listing
+        # the partitioned L1 table per read is the dominant point-read
+        # cost, and a row-batch write() touches only L0. Every L1
+        # mutator here and in tiering.py drops all entries
+        # (invalidate_hot_cache), and each entry self-validates against
+        # its tier's token (see _layout_token), so any Spark writer —
+        # including an external streaming sink on hot_path — is picked
+        # up on the next read. Residual caveat: a non-Spark tool
+        # dropping a bare file into an EXISTING partition subdirectory
+        # changes no watched signature; call invalidate_hot_cache()
+        # after such writes.
+        self._hot_cache: dict[str, tuple[tuple, list[DataFrame]]] = {}
         # In-process lease primitives, created EAGERLY so the first
         # concurrent maintenance_lock acquisitions never race a lazy
         # check-then-set (commit.py keeps a module-lock fallback for
@@ -157,10 +163,10 @@ class TimeseriesStore:
             return par
 
     def invalidate_hot_cache(self) -> None:
-        """Drop the cached hot-table handle so the next read re-lists
-        the table. Called by every in-module mutator; call it manually
-        after writing hot/L0 files outside the Spark writer paths."""
-        self._hot_cache = None
+        """Drop every tier's cached handle so the next read re-lists
+        both tiers. Called by every L1 mutator; call it manually after
+        writing hot/L0 files outside the Spark writer paths."""
+        self._hot_cache.clear()
 
     def _require_l1_batch_writable(self) -> None:
         """Refuse batch mutation of an L1 layout owned by a streaming
@@ -185,39 +191,42 @@ class TimeseriesStore:
                 "migrate, or use start_hot_ingest_with_maintenance."
             )
 
-    def _layout_token(self) -> tuple:
-        """Cheap staleness token for the hot layout.
+    def _layout_token(self, tier: str) -> tuple:
+        """Cheap staleness token for one tier of the hot layout
+        (``"l1"`` or ``"l0"``).
 
-        Per watched root (hot table root, its _spark_metadata
-        streaming-commit dir, L0, L0 staging): the directory mtime PLUS
-        a hash of the directory listing — mtime alone is only as fine
-        as filesystem timestamp granularity, so a write landing within
-        the same tick as the cached token would be served stale. The
-        listing hash catches any add/remove of a top-level entry
-        (partition dir, L0 segment, streaming commit file) regardless
-        of timestamp resolution.
+        L1 watches the hot table root, its _spark_metadata
+        streaming-commit dir and (manifest-hot mode) its _log, where
+        every commit adds an entry — the staleness signal for ALL
+        manifest mutations. L0 watches the L0 root and the L0 staging
+        root. A row-batch ``write()`` changes only the L0 token, so
+        the cached L1 file index survives it.
 
-        Appends into an EXISTING partition subdirectory change neither
-        the root mtime nor its listing; those are caught by the
-        _SUCCESS marker's (mtime, inode) — FileOutputCommitter recreates
-        it on every batch job, so the inode changes even when mtime
-        granularity doesn't. CAVEAT: committers configured with
-        ``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``
+        Per watched root: the directory mtime PLUS a hash of the
+        directory listing — mtime alone is only as fine as filesystem
+        timestamp granularity, so a write landing within the same tick
+        as the cached token would be served stale. The listing hash
+        catches any add/remove of a top-level entry (partition dir, L0
+        segment, streaming commit file) regardless of timestamp
+        resolution.
+
+        Appends into an EXISTING L1 partition subdirectory change
+        neither the root mtime nor its listing; those are caught by
+        the _SUCCESS marker's (mtime, inode) — FileOutputCommitter
+        recreates it on every batch job, so the inode changes even
+        when mtime granularity doesn't. CAVEAT: committers configured
+        with ``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``
         never rewrite _SUCCESS; external batch appends into existing
         partition dirs then go undetected — call
         ``invalidate_hot_cache()`` after such writes (or keep the
         marker enabled, the default)."""
+        hot = self.config.hot_path
+        if tier == "l1":
+            roots = (hot, f"{hot}/_spark_metadata", f"{hot}/_log")
+        else:
+            roots = (self.config.l0_path, self.config.l0_staging_path)
         token = []
-        for path in (
-            self.config.hot_path,
-            f"{self.config.hot_path}/_spark_metadata",
-            # manifest-hot mode: every commit adds a _log entry, so the
-            # log listing is the staleness signal for ALL mutations
-            # (appends into existing partition dirs included)
-            f"{self.config.hot_path}/_log",
-            self.config.l0_path,
-            self.config.l0_staging_path,
-        ):
+        for path in roots:
             sig = self.fs.stat_signature(path)
             if sig is None:
                 token.append(None)
@@ -227,7 +236,8 @@ class TimeseriesStore:
                 except OSError:
                     listing = None
                 token.append((sig[0], listing))
-        token.append(self.fs.stat_signature(f"{self.config.hot_path}/_SUCCESS"))
+        if tier == "l1":
+            token.append(self.fs.stat_signature(f"{hot}/_SUCCESS"))
         return tuple(token)
 
     # ------------------------------------------------------------------ O1
@@ -286,24 +296,26 @@ class TimeseriesStore:
         collapsed: dict[tuple, tuple] = {}
         for seq, (tag, ts, value) in enumerate(rows):
             collapsed[(tag, ts)] = (tag, ts, value, ingest_ts, self.writer_id, seq)
-        data = [
+        data = sorted(
             (tag, ts, value, its, wid, seq, ts - (ts % w))
             for (tag, ts, value, its, wid, seq) in collapsed.values()
-        ]
-        # Row-batch writes land in the L0 staging tier as ONE flat file
-        # per batch (LSM memtable flush): a 2,000-row batch spread over
-        # 200 tags touches 200+ partition directories, and writing the
+        )
+        # Row-batch writes land in the L0 tier as ONE flat file per
+        # batch (LSM memtable flush): a 2,000-row batch spread over 200
+        # tags touches 200+ partition directories, and writing the
         # partitioned layout per batch costs >1 s in file/commit
         # overhead alone (measured; it is why the reference's LSM
-        # appends first and sorts later, recipe:19-20). L0 segments are
-        # globally sorted by (tag, ts) so the row-group min/max stats
-        # give reads the same pruning the partition directories give
-        # L1; flush_l0/compact fold them into the partitioned layout.
-        import pandas as pd
-
-        pdf = pd.DataFrame(data, columns=[f.name for f in SAMPLE_SCHEMA.fields])
-        df = self.spark.createDataFrame(pdf, SAMPLE_SCHEMA)
-        self._append_l0(df)
+        # appends first and sorts later, recipe:19-20); flush_l0/compact
+        # fold segments into the partitioned layout. The tuple sort is
+        # the (tag, ts) order (keys are unique after the collapse), so
+        # each tag's rows are contiguous under the row-group min/max
+        # stats. The batch is bounded and SAMPLE_SCHEMA is all exact
+        # scalars, so the driver writes the file itself — no Spark job,
+        # no fallback, errors propagate — and publishes it by atomic
+        # rename. Only the L0 handle goes stale; the cached L1 file
+        # index stays valid.
+        _write_row_batch(self, data, SAMPLE_SCHEMA, self.config.l0_path)
+        self._hot_cache.pop("l0", None)
         partitions = len({(t, ps) for (t, _, _, _, _, _, ps) in data})
         return WriteMetrics(rows_written=len(data), partitions_touched=partitions)
 
@@ -431,30 +443,6 @@ class TimeseriesStore:
             )
         self.invalidate_hot_cache()
 
-    def _append_l0(self, df: DataFrame) -> None:
-        # coalesce(1): one segment file per batch. Cheap here because
-        # the input is Arrow batches already in the JVM (unlike
-        # coalescing a Python-parallelized DataFrame).
-        (
-            df.coalesce(1).write.mode("append")
-            # No _SUCCESS marker for L0 segments: nothing reads it
-            # (hot() lists segment files; staleness tokens hash the
-            # listing) and flush_l0 deletes it — which RACED a
-            # concurrent write()'s job commit creating it (Hadoop's
-            # committer creates the marker then chmods it; the delete
-            # landing between the two fails the whole write job with
-            # "chmod: cannot access .../_SUCCESS"). Root cause of the
-            # ~1/40 multiwriter lose-nothing flake (r13): the leaseless
-            # write()-vs-maintenance contract was broken not by data
-            # loss but by maintenance failing the writer's commit.
-            .option(
-                "mapreduce.fileoutputcommitter.marksuccessfuljobs",
-                "false",
-            )
-            .parquet(self.config.l0_path)
-        )
-        self.invalidate_hot_cache()
-
     def flush_l0(self) -> bool:
         """Fold the L0 staging segments into the partitioned L1 layout
         (the LSM memtable -> sorted-run flush). Returns True if
@@ -465,12 +453,11 @@ class TimeseriesStore:
         1. every L0 segment is MOVED (atomic local rename) into a fresh
            ``hot_l0_staging/<id>/`` dir — new ``write()`` batches
            landing mid-flush are untouched. Entries starting with ``_``
-           or ``.`` are left in place: ``_temporary`` is a concurrent
-           append's IN-FLIGHT commit (moving it would strand that
-           batch's rows in staging, where ``_fold_staged`` skips
-           hidden names, and then delete them with the staging dir —
-           a silent data loss + failed commit); ``_SUCCESS``/``.crc``
-           are inert markers/sidecars;
+           or ``.`` are left in place: a concurrent ``write()``'s
+           hidden in-flight segment is not yet published (moving it
+           would fail that write's publishing rename, and a crashed
+           write's leftover must never be folded); ``_SUCCESS``/
+           ``.crc`` are inert markers/sidecars;
         2. the staged segments are clustered onto their
            (tag, part_start) key (explicit parallelism: AQE would
            coalesce the tiny shuffle into one task and serialize the
@@ -532,14 +519,12 @@ class TimeseriesStore:
                 self.fs.rename(
                     f"{self.config.l0_path}/{crc}", f"{stage_dir}/{crc}"
                 )
-        # The _SUCCESS marker (and its sidecar) describe batches that
-        # were ALL just moved out — inert now, and they'd block the
-        # rmdir below. New L0 writes no longer create the marker (r13:
-        # deleting it here raced a concurrent write()'s job commit,
-        # which creates-then-chmods it — the captured root cause of
-        # the multiwriter flake), so this removal only tidies legacy
-        # layouts. _temporary (an in-flight append) is never
-        # touched: it keeps the dir alive, as it must.
+        # A Spark-written segment (an external writer, or a layout from
+        # before write() wrote segments on the driver) leaves a _SUCCESS
+        # marker: inert once its batches moved out, and it would block
+        # the rmdir below. In-flight names (a concurrent write()'s
+        # hidden ``.part-*.inflight``, a Spark writer's _temporary) are
+        # never touched: they keep the dir alive, as they must.
         for marker in ("_SUCCESS", "._SUCCESS.crc"):
             if self.fs.exists(f"{self.config.l0_path}/{marker}"):
                 self.fs.remove_file(f"{self.config.l0_path}/{marker}")
@@ -660,46 +645,65 @@ class TimeseriesStore:
         ``StorageFilesystem`` — see fs.py; a lakehouse deployment
         replaces it with a catalog lookup.)
 
-        The returned handle is cached on the instance — repeated reads
-        skip the per-query file listing — and every mutator
-        invalidates it (see ``invalidate_hot_cache``)."""
+        Each tier's handle is cached on the instance under its own
+        layout token (see ``_layout_token``): repeated reads skip the
+        per-query file listing, and a ``write()`` re-lists only the
+        flat L0 directory while the L1 file index — a Spark listing
+        job over every partition dir — is reused. Every L1 mutator
+        drops both (see ``invalidate_hot_cache``)."""
         self._require_init()
-        token = self._layout_token()
-        if self._hot_cache is not None and self._hot_cache[0] == token:
-            return self._hot_cache[1]
-        field_names = [f.name for f in SAMPLE_SCHEMA.fields]
-        tiers = []
-        if self.commit.tracks_changes(self, self.config.hot_path):
-            # Manifest-managed L1 (see EngineConfig.manifest_hot): the
-            # snapshot is the COMMITTED file list — a raw directory
-            # scan would double-read superseded files a rewrite left
-            # for deferred vacuum.
-            tiers.append(
-                self.commit.read_table(
-                    self, self.config.hot_path, SAMPLE_SCHEMA
-                ).select(*field_names)
-            )
-        elif self.fs.exists(self.config.hot_path):
-            tiers.append(
-                self.spark.read.schema(SAMPLE_SCHEMA)
-                .parquet(self.config.hot_path)
-                .select(*field_names)
-            )
-        tiers.extend(self._l0_tiers(field_names))
+        # L0 first: a concurrent flush moves rows L0 -> staging -> L1
+        # and drops staging only after the L1 append, so a row missing
+        # from this L0 view is already in the L1 view resolved after it
+        l0 = self._tier_frames("l0")
+        return self._union(self._tier_frames("l1") + l0)
+
+    def _union(self, tiers: list[DataFrame]) -> DataFrame:
         if not tiers:
             return self.spark.createDataFrame([], SAMPLE_SCHEMA)
         df = tiers[0]
         for t in tiers[1:]:
             df = df.unionByName(t)
-        self._hot_cache = (token, df)
         return df
 
-    def _l0_tiers(self, field_names) -> list[DataFrame]:
+    def _tier_frames(self, tier: str) -> list[DataFrame]:
+        """One tier's cached handles, rebuilt when its token moved."""
+        token = self._layout_token(tier)
+        cached = self._hot_cache.get(tier)
+        if cached is not None and cached[0] == token:
+            return cached[1]
+        frames = self._l1_frames() if tier == "l1" else self._l0_frames()
+        self._hot_cache[tier] = (token, frames)
+        return frames
+
+    def _l1_frames(self) -> list[DataFrame]:
+        field_names = [f.name for f in SAMPLE_SCHEMA.fields]
+        if self.commit.tracks_changes(self, self.config.hot_path):
+            # Manifest-managed L1 (see EngineConfig.manifest_hot): the
+            # snapshot is the COMMITTED file list — a raw directory
+            # scan would double-read superseded files a rewrite left
+            # for deferred vacuum.
+            return [
+                self.commit.read_table(
+                    self, self.config.hot_path, SAMPLE_SCHEMA
+                ).select(*field_names)
+            ]
+        if self.fs.exists(self.config.hot_path):
+            return [
+                self.spark.read.schema(SAMPLE_SCHEMA)
+                .parquet(self.config.hot_path)
+                .select(*field_names)
+            ]
+        return []
+
+    def _l0_frames(self) -> list[DataFrame]:
         """The unflushed L0 segments plus any UNCOMMITTED staging dirs
         (a flush crashed — or is running — between the L0 move and the
         L1 append; those rows live only in staging, so reads must
         include them). COMMITTED dirs are already in L1 and excluded
-        (including them would double-read)."""
+        (including them would double-read). Hidden names — a write's
+        in-flight segment — are skipped by Spark's listing."""
+        field_names = [f.name for f in SAMPLE_SCHEMA.fields]
         tiers: list[DataFrame] = []
         if self.fs.exists(self.config.l0_path):
             tiers.append(
@@ -734,26 +738,21 @@ class TimeseriesStore:
         a narrow range read stops listing the world at plan time,
         before Catalyst's directory-level pruning even runs. Superset
         guard: callers keep their row predicates. Directory-mode
-        stores (no per-file stats) return the full ``hot()``. Not
-        cached — the pruned plan is query-specific; the underlying
-        manifest entry reads are cache-served either way."""
+        stores (no per-file stats) return the full ``hot()``. The L1
+        leg is not cached — the pruned plan is query-specific; the
+        underlying manifest entry reads are cache-served either way —
+        while the L0 leg is ``hot()``'s cached tier."""
         self._require_init()
         if not predicates or not self.commit.tracks_changes(
             self, self.config.hot_path
         ):
             return self.hot()
-        field_names = [f.name for f in SAMPLE_SCHEMA.fields]
-        tiers = [
-            self.commit.read_table_pruned(
-                self, self.config.hot_path, SAMPLE_SCHEMA,
-                predicates=dict(predicates),
-            ).select(*field_names)
-        ]
-        tiers.extend(self._l0_tiers(field_names))
-        df = tiers[0]
-        for t in tiers[1:]:
-            df = df.unionByName(t)
-        return df
+        l0 = self._tier_frames("l0")  # before L1, as in hot()
+        pruned = self.commit.read_table_pruned(
+            self, self.config.hot_path, SAMPLE_SCHEMA,
+            predicates=dict(predicates),
+        ).select(*[f.name for f in SAMPLE_SCHEMA.fields])
+        return self._union([pruned] + l0)
 
     def cold(self, predicates: Mapping | None = None) -> DataFrame:
         """The cold tier. ``predicates`` ({col: (lo, hi)} inclusive

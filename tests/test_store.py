@@ -336,6 +336,25 @@ class TestPhysicalLayout:
             store.config.hot_path
         )
         assert {r.ts for r in store.hot().collect()} == {1, 2, 3, 4}
+        # The L1 handle is cached apart from L0: a row-batch write
+        # keeps it, and both an L0 write and an external L1 write
+        # landing before the same read are each seen, through hot()
+        # and through the range read.
+        l1 = store._hot_cache["l1"]
+        store.write([("t", 5, "e")], ingest_ts=500)
+        assert {r.ts for r in store.hot().collect()} == {1, 2, 3, 4, 5}
+        assert store._hot_cache["l1"] is l1
+        ext.selectExpr(
+            "tag", "6L AS ts", "'f' AS value", "ingest_ts", "writer_id",
+            "seq", "part_start",
+        ).write.mode("append").partitionBy("tag", "part_start").parquet(
+            store.config.hot_path
+        )
+        store.write([("t", 7, "g")], ingest_ts=700)
+        assert {
+            r.ts for r in store.read_range({"t": (0, 100)}).collect()
+        } == {1, 2, 3, 4, 5, 6, 7}
+        assert {r.ts for r in store.hot().collect()} == {1, 2, 3, 4, 5, 6, 7}
 
     def test_corrupt_hot_store_raises(self, store):
         """A broken hot store must ERROR, not read as empty — an empty
@@ -487,6 +506,76 @@ class TestLayoutTokenGranularity:
         # only the listing hash can reveal the new segment.
         os.utime(store.config.l0_path, ns=(st.st_atime_ns, st.st_mtime_ns))
         assert {r.ts for r in store.hot().collect()} == {1, 2}
+
+    def test_row_batch_write_moves_only_the_l0_token(self, store):
+        store.write([("t", 1, "a")], ingest_ts=100)
+        store.flush_l0()
+        l1, l0 = store._layout_token("l1"), store._layout_token("l0")
+        store.write([("t", 2, "b")], ingest_ts=200)
+        assert store._layout_token("l1") == l1
+        assert store._layout_token("l0") != l0
+        store.flush_l0()
+        assert store._layout_token("l1") != l1
+
+    def test_same_mtime_external_l1_partition_detected(self, spark, store):
+        """A new L1 partition dir from another writer is caught by the
+        hot root's listing hash even when its mtime is forced back
+        onto the cached token's tick."""
+        import os
+
+        from redis_lsm_timeseries_spark.store import TimeseriesStore
+
+        store.write([("t", 1, "a")], ingest_ts=100)
+        store.flush_l0()
+        assert {r.tag for r in store.hot().collect()} == {"t"}
+        st = os.stat(store.config.hot_path)
+        other = TimeseriesStore(spark, store.config)
+        other.initialize()
+        other.write_df(
+            spark.createDataFrame(
+                [("u", 1, "b")], "tag string, ts long, value string"
+            ),
+            ingest_ts=200,
+        )
+        os.utime(store.config.hot_path, ns=(st.st_atime_ns, st.st_mtime_ns))
+        assert {r.tag for r in store.hot().collect()} == {"t", "u"}
+
+    def test_crashed_write_leftover_never_read_or_folded(self, store):
+        """A write that died before its publishing rename leaves only a
+        hidden in-flight file: no read returns its rows, and flush_l0
+        neither folds nor removes it."""
+        import os
+        import shutil
+
+        store.write([("t", 1, "a")], ingest_ts=100)
+        [seg] = os.listdir(store.config.l0_path)
+        leftover = f"{store.config.l0_path}/.part-crashed.snappy.parquet.inflight"
+        shutil.copy(f"{store.config.l0_path}/{seg}", leftover)
+        os.remove(f"{store.config.l0_path}/{seg}")
+        assert store.hot().count() == 0
+        assert store.read_range({"t": (0, 10)}).count() == 0
+        assert store.flush_l0() is False  # nothing published to fold
+        store.write([("t", 2, "b")], ingest_ts=200)
+        assert store.flush_l0() is True
+        assert os.listdir(store.config.l0_path) == [os.path.basename(leftover)]
+        assert {r.ts for r in store.read_all().collect()} == {2}
+        assert {r.ts for r in store.hot().collect()} == {2}
+
+    def test_write_into_unwritable_l0_raises(self, store):
+        """The driver-side segment write has no fallback: a failure
+        propagates and nothing becomes readable."""
+        import os
+        import shutil
+
+        store.write([("t", 1, "a")], ingest_ts=100)
+        shutil.rmtree(store.config.l0_path)
+        # a plain file where the L0 dir belongs: unwritable for any user
+        with open(store.config.l0_path, "w", encoding="utf-8") as fh:
+            fh.write("not a directory")
+        with pytest.raises(OSError):
+            store.write([("t", 2, "b")], ingest_ts=200)
+        os.remove(store.config.l0_path)
+        assert store.hot().count() == 0
 
 
 class TestManifestHotPrunedReads:
